@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, to_json, xxhash64}
 import org.apache.spark.sql.types.MapType
+import scala.util.control.NonFatal
 
 /** Per-round benchmark main: times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and emits one JSON line.
@@ -96,7 +97,7 @@ object Bench {
     // tax off the timed medians.
     ordered.take(12).foreach { case (_, fn) =>
       try { forceEval(fn(spark, sfDir)); spark.catalog.clearCache() }
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     val results = ordered
       .map { case (name, fn) =>
@@ -109,7 +110,7 @@ object Bench {
         val t0 = System.nanoTime()
         try { forceEval(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
         catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             None
         }
@@ -176,13 +177,13 @@ object Bench {
     val reControl =
       if (suspects.isEmpty) controlMedian
       else try medianOf(SparkEntry.queries(ControlQuery))
-      catch { case _: Throwable => controlMedian }
+      catch { case NonFatal(_) => controlMedian }
     val reFactor = math.max(1.0, reControl / controlBudget)
     val confirmed = suspects.map { case (k, firstMedian) =>
       val fn = SparkEntry.queries(k)
       // the query already ran clean three times in the sweep; if the
       // re-run still throws, keep the first capture (stay a violation)
-      val re = try medianOf(fn) catch { case _: Throwable => firstMedian }
+      val re = try medianOf(fn) catch { case NonFatal(_) => firstMedian }
       val budget = BenchBudgets.budgets(k)
       // verdict on the BETTER capture: the re-measure exists to strip
       // contention from the first pass, but the re-measure phase runs
@@ -243,7 +244,7 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(outPath),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
     System.err.println(line)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Loaders for the driver-generated TPC-H-ish tables.
   *
@@ -48,11 +49,11 @@ object Tables {
           val st = java.nio.file.Files.list(pp)
           try st.mapToLong { f =>
             try java.nio.file.Files.getLastModifiedTime(f).toMillis
-            catch { case _: Throwable => 0L }
+            catch { case NonFatal(_) => 0L }
           }.reduce(own, math.max)
           finally st.close()
         } else own
-      } catch { case _: Throwable => 0L }
+      } catch { case NonFatal(_) => 0L }
     val schema = schemaMemo.computeIfAbsent(s"$path@$mtime",
       _ => spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
@@ -76,20 +77,17 @@ object Tables {
     * coalescing, so the spread survives to the expressions it feeds. */
   def spread(s: SparkSession, df: DataFrame, dir: String, name: String,
       key: org.apache.spark.sql.Column): DataFrame = {
-    // measurement escape hatch: lets A/B probes time the unspread plan
-    // without a code edit (results are identical either way)
-    if (sys.env.contains("SPARK_GRAFT_NO_SPREAD")) return df
     val path = java.nio.file.Paths.get(s"$dir/$name.parquet")
     val bytes =
       try {
         if (java.nio.file.Files.isDirectory(path)) {
           val st = java.nio.file.Files.list(path)
           try st.mapToLong(f => try java.nio.file.Files.size(f) catch {
-            case _: Throwable => 0L
+            case NonFatal(_) => 0L
           }).sum()
           finally st.close()
         } else java.nio.file.Files.size(path)
-      } catch { case _: Throwable => Long.MaxValue }
+      } catch { case NonFatal(_) => Long.MaxValue }
     val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
     if (bytes < maxSplit) df.repartition(s.sparkContext.defaultParallelism, key)
     else df

@@ -19,7 +19,7 @@ object BenchOne {
     Seq("lineitem", "embeddings", "documents").view
       .map { t =>
         try { spark.read.parquet(s"$sfDir/$t.parquet").count(); true }
-        catch { case _: Throwable => false }
+        catch { case scala.util.control.NonFatal(_) => false }
       }.find(identity)
     args.foreach { name =>
       val fn = graft.SparkEntry.queries(name)

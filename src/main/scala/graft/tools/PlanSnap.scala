@@ -34,7 +34,7 @@ object PlanSnap {
           df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
         } catch {
-          case e: Throwable => s"PLAN UNAVAILABLE: ${e.getClass.getName}: ${e.getMessage}"
+          case scala.util.control.NonFatal(e) => s"PLAN UNAVAILABLE: ${e.getClass.getName}: ${e.getMessage}"
         }
       Files.write(outDir.resolve(s"${name}_$suffix.txt"),
         body.getBytes(StandardCharsets.UTF_8))

@@ -69,7 +69,7 @@ object ScaleBench {
         val outcome =
           try { graft.Bench.forceEval(fn(spark, sfDir)); "ok" }
           catch {
-            case e: Throwable =>
+            case scala.util.control.NonFatal(e) =>
               if (fired.get()) "timeout"
               else { System.err.println(s"[scale] $name failed: ${e.getMessage}"); "fail" }
           } finally {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{ModernState, StreamOps}
+import graft.streaming.StreamOps
 
 /** Load soak for the stateful streaming mirrors (r10 verdict #5): the
   * MemoryStream specs prove CORRECTNESS batch-by-batch but record
@@ -33,7 +33,8 @@ import graft.streaming.{ModernState, StreamOps}
   * real ingest), and the corpus side is the sf0.01 documents table,
   * exactly the batch `Dedup.bandIndex` build the op ships with.
   *
-  * Usage: runMain graft.tools.StreamSoak [soakSeconds] [sfDir]
+  * Usage: runMain graft.tools.StreamSoak [soakSeconds] [sfDir] [families]
+  * (families: comma list of [[Families]]; default [[DefaultFamilies]])
   * Output: one human table + one JSON line per op on stdout.
   */
 object StreamSoak {
@@ -125,9 +126,9 @@ object StreamSoak {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Runs `body` with the RocksDB state store provider set, restoring
-    * the previous provider after (the StreamingSpec swap pattern).
-    * `transformWithState` REQUIRES RocksDB; for classic ops this is
-    * the alternate-provider measurement. */
+    * the previous provider after (the StreamingSpec swap pattern) —
+    * the alternate-provider measurement, the analogue of the
+    * reference's Flink state backend. */
   private def withRocksDb[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = s.conf.getOption(key)
@@ -181,8 +182,8 @@ object StreamSoak {
       p: org.apache.spark.sql.streaming.StreamingQueryProgress): Option[Long] =
     Option(p).flatMap(pp => parseWatermark(pp.eventTime.get("watermark")))
 
-  /** Kill-and-restore under load (r12 verdict-4): runs a jump-verdict
-    * op twice over the SAME deterministic rate-derived event stream —
+  /** Kill-and-restore under load (r12 verdict-4): runs jumpDetect
+    * twice over the SAME deterministic rate-derived event stream —
     * once continuously, once STOPPED at half-soak and restarted from
     * its checkpoint — both into exactly-once parquet sinks, and
     * asserts the jump VERDICT SETS are identical below the safe
@@ -192,14 +193,12 @@ object StreamSoak {
     * lost/duplicated state row after restore shows up as a set
     * difference, not silence.
     *
-    * r14 (verdict-6): parameterized by offered rate and op so the
-    * `restore_top` family can prove recovery at the headroom ladder's
-    * highest clean rung (classic 800k, modern 400k on RocksDB), not
-    * just at the 200k cruise rate. */
+    * r14 (verdict-6): parameterized by offered rate so the
+    * `restore_top` family can prove recovery at the highest clean
+    * measured rate (800k on RocksDB), not just at the 200k cruise
+    * rate; `opTag` names the row. */
   private def restoreCheck(s: SparkSession, soakSec: Int,
-      rps: Long = 200000L, opTag: String = "jumpDetect")(
-      build: org.apache.spark.sql.Dataset[StreamOps.Evt] => DataFrame =
-        StreamOps.jumpDetect(_).toDF()): String = {
+      rps: Long = 200000L, opTag: String = "jumpDetect"): String = {
     val root = s"/tmp/soak_restore/$opTag@$rps"
     rmTree(root)
     val users = 5000000L
@@ -208,7 +207,7 @@ object StreamSoak {
     // else the first query's — the checkpointed watermark only
     // advances across the restart)
     def run(tag: String, kill: Boolean): Option[Long] = {
-      def start() = build(evt(rateSource(s, rps), users)
+      def start() = StreamOps.jumpDetect(evt(rateSource(s, rps), users)
           .as[StreamOps.Evt](org.apache.spark.sql.Encoders.product[StreamOps.Evt]))
         .writeStream
         .format("parquet")
@@ -254,6 +253,24 @@ object StreamSoak {
     s"""{"op":"$opTag[kill+restore]","offered_rps":$rps,"watermark_bound_ms":$bound,"verdicts_below_bound":$nRef,"only_in_ref":$onlyRef,"only_in_restored":$onlyKil,"equal":$ok}"""
   }
 
+  /** The families run by default; `restore_top` (kill+restore at the
+    * highest clean rate — r14) is opt-in. */
+  private[graft] val DefaultFamilies =
+    Set("windowed", "cep", "rocksdb", "restore", "gate")
+  private[graft] val Families = DefaultFamilies + "restore_top"
+
+  /** Parses the comma-separated families argument. An unknown name is
+    * an error, not a silent no-op: a typo would otherwise run nothing
+    * and print an empty result list. */
+  private[graft] def parseFamilies(arg: String): Set[String] = {
+    val fams = arg.split(",").toSet
+    val unknown = fams -- Families
+    require(unknown.isEmpty,
+      s"unknown StreamSoak families ${unknown.toSeq.sorted.mkString(",")}; " +
+        s"valid: ${Families.toSeq.sorted.mkString(",")}")
+    fams
+  }
+
   private def rmTree(p: String): Unit = {
     val root = java.nio.file.Paths.get(p)
     if (java.nio.file.Files.exists(root)) {
@@ -266,12 +283,8 @@ object StreamSoak {
   def main(args: Array[String]): Unit = {
     val soakSec = args.headOption.map(_.toInt).getOrElse(45)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    // families: comma list of windowed,cep,rocksdb,restore,gate
-    // (default all) + opt-in `headroom` (rate-ladder capacity probe)
-    // and `restore_top` (kill+restore at the ladder-top rates — r14)
-    val fams: Set[String] =
-      if (args.length > 2) args(2).split(",").toSet
-      else Set("windowed", "cep", "rocksdb", "restore", "gate")
+    val fams =
+      if (args.length > 2) parseFamilies(args(2)) else DefaultFamilies
     // fresh checkpoints per run (state footprint must start from zero)
     rmTree("/tmp/soak_ckpt")
     val spark = graft.Bench.benchSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
@@ -311,54 +324,19 @@ object StreamSoak {
         StreamOps.jumpDetectStrict(evts(r)).toDF()),
       soak(spark, "funnelStream", 200000L, soakSec)(r =>
         StreamOps.funnelStream(evts(r), windowUs = 3600000000L).toDF()))
-    if (fams("rocksdb")) results ++= withRocksDb(spark)(Seq(
-      // classic mirror on the alternate provider + the
-      // transformWithState twins (which REQUIRE RocksDB): same load,
-      // same rates, directly comparable rows/s and footprint
-      soak(spark, "jumpDetect[rocksdb]", 200000L, soakSec)(r =>
-        StreamOps.jumpDetect(evts(r)).toDF()),
-      soak(spark, "modern.uniqueVisit[rocksdb]", 200000L, soakSec)(r =>
-        ModernState.uniqueVisit(evts(r)).toDF()),
-      soak(spark, "modern.jumpDetect[rocksdb]", 200000L, soakSec)(r =>
-        ModernState.jumpDetect(evts(r)).toDF()),
-      soak(spark, "modern.jumpDetectStrict[rocksdb]", 200000L, soakSec)(r =>
-        ModernState.jumpDetectStrict(evts(r)).toDF())))
-    if (fams("headroom")) {
-      // r12 verdict-5: the transformWithState twins sustain 2-4x less
-      // than classic flatMapGroupsWithState under identical RocksDB
-      // load (typed-state column families + REAL timer writes are the
-      // API's price — the timer dedup in ModernState already avoids
-      // every avoidable re-registration). Offer an escalating rate
-      // ladder to the modern twins AND the classic twin on the same
-      // provider: the sustained rows/s plateau is the measured
-      // capacity pinned in SURVEY §4.
-      val ladder = Seq(200000L, 400000L, 800000L)
-      results ++= withRocksDb(spark)(ladder.flatMap { r =>
-        val tag = s"${r / 1000}k"
-        Seq(
-          soak(spark, s"jumpDetect[rocksdb,$tag]", r, soakSec)(x =>
-            StreamOps.jumpDetect(evts(x)).toDF()),
-          soak(spark, s"modern.jumpDetect[rocksdb,$tag]", r, soakSec)(x =>
-            ModernState.jumpDetect(evts(x)).toDF()),
-          soak(spark, s"modern.jumpDetectStrict[rocksdb,$tag]", r, soakSec)(x =>
-            ModernState.jumpDetectStrict(evts(x)).toDF()),
-          soak(spark, s"modern.uniqueVisit[rocksdb,$tag]", r, soakSec)(x =>
-            ModernState.uniqueVisit(evts(x)).toDF()))
-      })
-    }
+    if (fams("rocksdb"))
+      // the cep family's jumpDetect on the alternate provider: same
+      // load, same rate, directly comparable rows/s and footprint
+      results += withRocksDb(spark)(
+        soak(spark, "jumpDetect[rocksdb]", 200000L, soakSec)(r =>
+          StreamOps.jumpDetect(evts(r)).toDF()))
     if (fams("restore"))
-      results += restoreCheck(spark, soakSec)()
-    if (fams("restore_top")) {
-      // r13 verdict-6: recovery proven AT the measured capacity — the
-      // headroom ladder's highest clean rung per twin (classic 800k;
-      // modern 400k, which REQUIRES RocksDB — run the classic top rung
-      // on RocksDB too so the pair differs only in the API)
-      results ++= withRocksDb(spark)(Seq(
-        restoreCheck(spark, soakSec, 800000L, "jumpDetect[rocksdb]")(
-          StreamOps.jumpDetect(_).toDF()),
-        restoreCheck(spark, soakSec, 400000L, "modern.jumpDetect[rocksdb]")(
-          ModernState.jumpDetect(_).toDF())))
-    }
+      results += restoreCheck(spark, soakSec)
+    if (fams("restore_top"))
+      // r13 verdict-6: recovery proven AT the measured capacity (the
+      // highest clean rate, 800k), on the RocksDB provider
+      results += withRocksDb(spark)(
+        restoreCheck(spark, soakSec, 800000L, "jumpDetect[rocksdb]"))
     if (fams("gate")) {
       // the ingest gate: shingle+128-hash signature per doc + band join
       val corpus = graft.Tables.documents(spark, sfDir).select("doc_id", "text")

@@ -9,7 +9,7 @@ import graft.tools.StreamSoak
   * guarantee surface of the event-time-timeout emission path — minus
   * gap + slack, never a max-emitted-ts heuristic (which overshoots at
   * saturation, where the pair path runs ahead of the watermark by the
-  * whole restart backlog). */
+  * whole restart backlog). Also pins the families-argument parse. */
 class StreamSoakSpec extends AnyFunSuite {
 
   test("safeHorizon bounds by the SLOWER run's committed watermark") {
@@ -34,5 +34,15 @@ class StreamSoakSpec extends AnyFunSuite {
     assert(StreamSoak.parseWatermark("1970-01-01T00:00:00.000Z").isEmpty)
     assert(StreamSoak.parseWatermark("not-a-timestamp").isEmpty)
     assert(StreamSoak.parseWatermark(null).isEmpty)
+  }
+
+  test("parseFamilies: known names parse, an unknown name fails naming the valid ones") {
+    assert(StreamSoak.parseFamilies("cep,rocksdb") === Set("cep", "rocksdb"))
+    assert(StreamSoak.parseFamilies("restore_top") === Set("restore_top"))
+    // a removed family or a typo must not silently run nothing
+    for (bad <- Seq("headroom", "cep,rocksbd", "")) {
+      val e = intercept[IllegalArgumentException](StreamSoak.parseFamilies(bad))
+      StreamSoak.Families.foreach(f => assert(e.getMessage.contains(f)))
+    }
   }
 }

@@ -114,63 +114,10 @@ class StreamingSpec extends SparkSpec {
     assert(visits.toSet === Set((7L, "1970-01-02", 1L), (7L, "1970-01-03", 4L)))
   }
 
-  test("transformWithState newUserFlag matches the classic API (RocksDB store)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val rows = runBatches("nuf2")(in => graft.streaming.ModernState.newUserFlag(in.toDS()))(Seq(
-        Seq(Evt(1, 7, "view", 0, ts(1)), Evt(2, 7, "view", 0, ts(2)), Evt(3, 8, "view", 0, ts(3))),
-        Seq(Evt(4, 7, "view", 0, ts(10)), Evt(5, 9, "view", 0, ts(11)))))
-      val flags = rows.map(r => r.getLong(0) -> r.getInt(2)).toMap
-      assert(flags === Map(1L -> 1, 2L -> 0, 3L -> 1, 4L -> 0, 5L -> 1))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("transformWithState uniqueVisit matches the classic API scenario-for-scenario") {
-    withRocksDb {
-      // first-visit emission across batches (the classic test's data)
-      val day0 = ts(10)
-      val day1 = ts(24 * 60 + 10)
-      val rows = runBatches("uv2")(in => graft.streaming.ModernState.uniqueVisit(in.toDS()))(Seq(
-        Seq(Evt(1, 7, "view", 0, day0), Evt(2, 7, "view", 0, ts(20))),
-        Seq(Evt(3, 7, "view", 0, ts(30)), Evt(4, 7, "view", 0, day1))))
-      val visits = rows.map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-      assert(visits.toSet === Set((7L, "1970-01-02", 1L), (7L, "1970-01-03", 4L)))
-      // in-horizon late cross-day dedup (the classic TTL test's data)
-      val rows2 = runBatches("uvttl3")(in => graft.streaming.ModernState.uniqueVisit(in.toDS()))(Seq(
-        Seq(Evt(1, 7, "view", 0, day0)),
-        Seq(Evt(2, 7, "view", 0, day1)),
-        Seq(Evt(3, 7, "view", 0, ts(120)))))
-      assert(rows2.map(r => (r.getString(1), r.getLong(2))).toSet ===
-        Set(("1970-01-02", 1L), ("1970-01-03", 2L)))
-    }
-  }
-
-  test("transformWithState jumpDetect matches the classic API (real event-time timers)") {
-    withRocksDb {
-      val batches = Seq(
-        Seq(Evt(1, 7, "view", 0, ts(0)), Evt(10, 8, "view", 0, ts(1))),
-        Seq(Evt(2, 7, "view", 0, ts(20)), Evt(3, 7, "view", 0, ts(21))),
-        Seq(Evt(99, 999, "view", 0, ts(10000))),
-        Seq(Evt(100, 999, "view", 0, ts(10001))))
-      val rows = runBatches("jump2")(in => graft.streaming.ModernState.jumpDetect(in.toDS()))(batches)
-      val ids = rows.map(_.getLong(0)).toSet
-      assert(ids.contains(1L), "isolated first event must be a jump")
-      assert(ids.contains(10L), "lone event must be confirmed via the expired timer")
-      assert(!ids.contains(2L) && !ids.contains(3L), "clustered events are not jumps")
-      // and the verdict set equals the classic implementation's on the same input
-      val classic = runBatches("jump2c")(in => StreamOps.jumpDetect(in.toDS()))(batches)
-        .map(_.getLong(0)).toSet
-      assert(ids === classic)
-    }
-  }
-
+  /** Runs `f` on the RocksDB state store, the analogue of the
+    * reference's Flink state backend: the "on the RocksDB state store"
+    * tests re-run the stateful mirrors' scenarios on it and assert the
+    * same verdicts as on the default provider. */
   private def withRocksDb(f: => Unit): Unit = {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
@@ -179,6 +126,51 @@ class StreamingSpec extends SparkSpec {
     try f finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
+    }
+  }
+
+  test("newUserFlag on the RocksDB state store: state survives micro-batches") {
+    withRocksDb {
+      val rows = runBatches("nuf2")(in => StreamOps.newUserFlag(in.toDS()))(Seq(
+        Seq(Evt(1, 7, "view", 0, ts(1)), Evt(2, 7, "view", 0, ts(2)), Evt(3, 8, "view", 0, ts(3))),
+        Seq(Evt(4, 7, "view", 0, ts(10)), Evt(5, 9, "view", 0, ts(11)))))
+      val flags = rows.map(r => r.getLong(0) -> r.getInt(2)).toMap
+      assert(flags === Map(1L -> 1, 2L -> 0, 3L -> 1, 4L -> 0, 5L -> 1))
+    }
+  }
+
+  test("uniqueVisit on the RocksDB state store: first visit per user-day, TTL dedup") {
+    withRocksDb {
+      // first-visit emission across batches (the default-provider test's data)
+      val day0 = ts(10)
+      val day1 = ts(24 * 60 + 10)
+      val rows = runBatches("uv2")(in => StreamOps.uniqueVisit(in.toDS()))(Seq(
+        Seq(Evt(1, 7, "view", 0, day0), Evt(2, 7, "view", 0, ts(20))),
+        Seq(Evt(3, 7, "view", 0, ts(30)), Evt(4, 7, "view", 0, day1))))
+      val visits = rows.map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      assert(visits.toSet === Set((7L, "1970-01-02", 1L), (7L, "1970-01-03", 4L)))
+      // in-horizon late cross-day dedup (the TTL test's data)
+      val rows2 = runBatches("uvttl3")(in => StreamOps.uniqueVisit(in.toDS()))(Seq(
+        Seq(Evt(1, 7, "view", 0, day0)),
+        Seq(Evt(2, 7, "view", 0, day1)),
+        Seq(Evt(3, 7, "view", 0, ts(120)))))
+      assert(rows2.map(r => (r.getString(1), r.getLong(2))).toSet ===
+        Set(("1970-01-02", 1L), ("1970-01-03", 2L)))
+    }
+  }
+
+  test("jumpDetect on the RocksDB state store: isolated and timed-out events are jumps") {
+    withRocksDb {
+      val batches = Seq(
+        Seq(Evt(1, 7, "view", 0, ts(0)), Evt(10, 8, "view", 0, ts(1))),
+        Seq(Evt(2, 7, "view", 0, ts(20)), Evt(3, 7, "view", 0, ts(21))),
+        Seq(Evt(99, 999, "view", 0, ts(10000))),
+        Seq(Evt(100, 999, "view", 0, ts(10001))))
+      val rows = runBatches("jump2")(in => StreamOps.jumpDetect(in.toDS()))(batches)
+      val ids = rows.map(_.getLong(0)).toSet
+      assert(ids.contains(1L), "isolated first event must be a jump")
+      assert(ids.contains(10L), "lone event must be confirmed via the event-time timeout")
+      assert(!ids.contains(2L) && !ids.contains(3L), "clustered events are not jumps")
     }
   }
 
@@ -608,7 +600,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState attribution matches the classic stream verdict-for-verdict") {
+  test("attributionStream on the RocksDB state store: first/last credit, lookback cut") {
     withRocksDb {
       // the attributionStream scenario, batch-for-batch: out-of-order
       // purchase, lookback-cut second conversion, error never credits
@@ -627,14 +619,11 @@ class StreamingSpec extends SparkSpec {
       def shape(rows: Array[org.apache.spark.sql.Row]) = rows
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3), r.getDouble(4)))
         .toSet
-      val modern = shape(runBatches("attr_m")(in =>
-        graft.streaming.ModernState.attribution(in.toDS()))(batches))
-      val classic = shape(runBatches("attr_c")(in =>
+      val credits = shape(runBatches("attr_r")(in =>
         StreamOps.attributionStream(in.toDS()))(batches))
-      assert(modern === Set(
+      assert(credits === Set(
         (3L, 1L, "view", "click", 100.0),
         (7L, 2L, "click", "click", 10.0)))
-      assert(modern === classic)
     }
   }
 
@@ -700,7 +689,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState jumpDetectStrict matches the classic strict CEP verdicts") {
+  test("jumpDetectStrict on the RocksDB state store: CEP pairs, kills, timeouts") {
     withRocksDb {
       val batches = Seq(
         Seq(Evt(1, 1, "signup", 0, ts(0)),
@@ -713,14 +702,10 @@ class StreamingSpec extends SparkSpec {
           Evt(2, 1, "view", 0, ts(5))),
         Seq(Evt(99, 9, "view", 0, ts(700))),
         Seq(Evt(100, 9, "view", 0, ts(710))))
-      val modern = runBatches("strict2")(in =>
-        graft.streaming.ModernState.jumpDetectStrict(in.toDS()))(batches)
-        .map(_.getLong(0)).toSet
-      val classic = runBatches("strict2c")(in =>
+      val jumps = runBatches("strict2")(in =>
         StreamOps.jumpDetectStrict(in.toDS()))(batches)
         .map(_.getLong(0)).toSet
-      assert(modern === Set(1L, 3L, 4L, 8L))
-      assert(modern === classic)
+      assert(jumps === Set(1L, 3L, 4L, 8L))
     }
   }
 
@@ -1159,14 +1144,9 @@ class StreamingSpec extends SparkSpec {
     def shape(rows: Array[org.apache.spark.sql.Row]) = rows
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3), r.getDouble(4)))
       .toSet
-    val classic = shape(runBatches("ripeattr_c")(in =>
+    val credits = shape(runBatches("ripeattr_c")(in =>
       StreamOps.attributionStream(in.toDS()))(batches))
-    assert(classic === Set((5L, 1L, "view", "click", 100.0)))
-    withRocksDb {
-      val modern = shape(runBatches("ripeattr_m")(in =>
-        graft.streaming.ModernState.attribution(in.toDS()))(batches))
-      assert(modern === classic)
-    }
+    assert(credits === Set((5L, 1L, "view", "click", 100.0)))
   }
 
   test("strict ripeness: funnel does not consume an event in the batch where wm == its ts") {
@@ -1226,13 +1206,8 @@ class StreamingSpec extends SparkSpec {
       Seq(Evt(2, 1, "view", 0, t5s)),       // equal ts, smaller id
       Seq(Evt(91, 9, "view", 0, ts(60))),
       Seq(Evt(92, 9, "view", 0, ts(70))))
-    val classic = runBatches("ripecep_c")(in =>
+    val jumps = runBatches("ripecep_c")(in =>
       StreamOps.jumpDetectStrict(in.toDS()))(batches).map(_.getLong(0)).toSet
-    assert(classic === Set(3L))
-    withRocksDb {
-      val modern = runBatches("ripecep_m")(in =>
-        graft.streaming.ModernState.jumpDetectStrict(in.toDS()))(batches).map(_.getLong(0)).toSet
-      assert(modern === classic)
-    }
+    assert(jumps === Set(3L))
   }
 }
